@@ -1,5 +1,10 @@
 package graft.etl
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.util.LineReader
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -16,17 +21,36 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * `Normalize` do name-driven projection/coercion. Empty string → SQL
   * NULL at the reader (P2) via `nullValue ""`.
   *
-  * Scale notes: header peek reads one line of one file; the data scan
+  * Scale notes: the header check opens each file once on the driver,
+  * through its Hadoop filesystem, and reads one line — no Spark job, so
+  * its cost is one open per file, not one job per file. The data scan
   * is distributed and never widens beyond the projected columns after
   * `Normalize` (Catalyst prunes through the project).
   */
 object Ingest {
 
   /** Trimmed header names of a TSV file (F3: headers are trim()ed). */
-  def headerOf(spark: SparkSession, path: String): Array[String] = {
-    import spark.implicits._
-    spark.read.text(path).limit(1).as[String].head()
-      .split('\t').map(_.trim)
+  def headerOf(spark: SparkSession, path: String): Array[String] =
+    headerOf(spark.sessionState.newHadoopConf(), path)
+
+  /** The first line of `path`, read on the driver the way Spark's text
+    * source reads it: through the path's Hadoop filesystem, decompressed
+    * by the codec its extension names, split at LF, CR or CRLF, decoded
+    * as UTF-8, one leading byte-order mark dropped (Hadoop's
+    * LineRecordReader drops it at offset 0, so the CSV reader never
+    * sees it). An empty file has no header and is refused. */
+  private def headerOf(conf: Configuration, path: String): Array[String] = {
+    val p = new Path(path)
+    val raw = p.getFileSystem(conf).open(p)
+    var in: java.io.InputStream = raw
+    try {
+      in = Option(new CompressionCodecFactory(conf).getCodec(p))
+        .fold[java.io.InputStream](raw)(_.createInputStream(raw))
+      val line = new Text()
+      require(new LineReader(in).readLine(line) > 0,
+        s"$path is empty: a TSV file needs a header line")
+      line.toString.stripPrefix("\uFEFF").split('\t').map(_.trim)
+    } finally in.close()
   }
 
   /** Read TSV files (same header across files) as all-string columns.
@@ -37,18 +61,19 @@ object Ingest {
     * whole-row `strict: true` (load.ts:164). */
   def readTsv(spark: SparkSession, paths: Seq[String], strict: Boolean = true,
       headerPath: Option[String] = None): DataFrame = {
-    val names = headerOf(spark, headerPath.getOrElse(paths.head))
+    val conf = spark.sessionState.newHadoopConf()
+    val anchor = headerPath.getOrElse(paths.head)
+    val names = headerOf(conf, anchor)
     // Spark binds a user schema to CSV files POSITIONALLY and by
     // default (enforceSchema) never looks at the other files' header
     // rows — a file whose header ORDERS the same columns differently
     // would silently misbind every column (the reference parses each
     // file against its OWN header, csv-parser `headers: true`). Every
-    // file's header must EQUAL the batch header, checked here with
-    // one first-line read per additional file; a mismatch refuses
-    // loudly instead of corrupting (review finding).
-    val anchor = headerPath.getOrElse(paths.head)
+    // file's header must EQUAL the batch header, checked here with one
+    // driver-side first-line read per additional file (no Spark job);
+    // a mismatch refuses loudly instead of corrupting.
     paths.filterNot(_ == anchor).foreach { p =>
-      val h = headerOf(spark, p)
+      val h = headerOf(conf, p)
       val firstDiff =
         if (h.length != names.length) s"column counts ${h.length} vs ${names.length}"
         else s"first differing column index ${h.zip(names).indexWhere(t => t._1 != t._2)}"

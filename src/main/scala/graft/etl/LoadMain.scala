@@ -1,5 +1,7 @@
 package graft.etl
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.SparkSession
 
 /** CLI entrypoint — the engine's analog of the reference's
@@ -44,18 +46,25 @@ object LoadMain {
     val all = LoadPipeline.listDataFiles(spark, inputDir)
     val sliced = all.slice(start.getOrElse(0), end.map(_ + 1).getOrElse(all.size))
     if (sliced.isEmpty) return Seq.empty
-    // stage the slice through a filtered view of the directory;
-    // symlink targets must be ABSOLUTE (relative targets resolve
-    // against the link's own directory → dangling links)
-    val sliceDir = java.nio.file.Files.createTempDirectory("load-slice")
-    sliced.foreach { f =>
-      val target = java.nio.file.Paths.get(f).toAbsolutePath
-      java.nio.file.Files.createSymbolicLink(
-        sliceDir.resolve(target.getFileName), target)
+    withSliceDir(sliced) { dir =>
+      LoadPipeline.runCatalog(spark, dir.toString, manifestPath, outPath, tolerance)
     }
-    try LoadPipeline.runCatalog(spark, sliceDir.toString,
-      manifestPath, outPath, tolerance)
-    finally { // clean the staging links
+  }
+
+  /** Stage `files` through a filtered view of their directory — a temp
+    * directory of symlinks — and run `body` over it. The directory is
+    * removed afterwards, also when staging a link fails. Symlink targets
+    * must be ABSOLUTE (relative targets resolve against the link's own
+    * directory → dangling links). */
+  private[graft] def withSliceDir[T](files: Seq[String])(body: Path => T): T = {
+    val sliceDir = Files.createTempDirectory("load-slice")
+    try {
+      files.foreach { f =>
+        val target = Paths.get(f).toAbsolutePath
+        Files.createSymbolicLink(sliceDir.resolve(target.getFileName), target)
+      }
+      body(sliceDir)
+    } finally {
       Option(sliceDir.toFile.listFiles()).foreach(_.foreach(_.delete()))
       sliceDir.toFile.delete()
     }

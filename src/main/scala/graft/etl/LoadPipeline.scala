@@ -82,7 +82,8 @@ object LoadPipeline {
     * catalog-driven and idempotent: discover files → skip ones the
     * manifest marks Loaded (P6) → load/publish the rest → register +
     * mark Loaded (S10/S11) → persist the manifest. A re-run with an
-    * unchanged input dir loads nothing. Returns the loaded file names.
+    * unchanged input dir loads nothing and leaves an existing manifest
+    * as it is. Returns the loaded file names.
     */
   def runCatalog(spark: SparkSession, inputDir: String,
       manifestPath: String, outPath: String,
@@ -152,7 +153,10 @@ object LoadPipeline {
       manifest = Manifest.markLoadedAll(manifest,
         todo.filterNot(f => badStates.contains(f.split("--")(1))))
     }
-    Manifest.save(manifest, manifestPath)
+    // nothing pending: an existing manifest is unchanged, a missing one
+    // is still written so the first run over an empty dir leaves one
+    if (todo.nonEmpty || !Publish.pathExists(spark, manifestPath))
+      Manifest.save(manifest, manifestPath)
     todo
   }
 
@@ -162,7 +166,9 @@ object LoadPipeline {
     * Hadoop filesystem, NOT java.io.File: a local-only listing is
     * silently empty on hdfs://s3a:// input dirs, which would make
     * runCatalog "succeed" having loaded nothing (the same failure
-    * class as the Manifest.load fix). */
+    * class as the Manifest.load fix). Every listed name must follow
+    * the `NN--ST--*.tab` grammar (F1/F2); this is the one place it is
+    * checked, so callers may split names without guarding. */
   def listDataFiles(spark: SparkSession, dir: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -170,6 +176,13 @@ object LoadPipeline {
       if (!fs.exists(p)) Array.empty[String]
       else fs.listStatus(p).filter(_.isFile).map(_.getPath.getName)
         .filter(n => n.contains(".tab") && !n.contains("DEMOGRAPHIC"))
+    names.foreach { n =>
+      val parts = n.split("--", 3)
+      require(parts.length == 3 && parts(0).matches("[0-9]{1,9}") &&
+          parts(1).nonEmpty,
+        s"data file '$n' in $dir does not follow the NN--ST--*.tab " +
+          "grammar (numeric file number, then a state token)")
+    }
     names.sortBy(n => n.split("--")(0).toInt).map(n => s"$dir/$n").toSeq
   }
 }

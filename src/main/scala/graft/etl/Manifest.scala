@@ -101,7 +101,17 @@ object Manifest {
   def load(spark: SparkSession, path: String): DataFrame =
     // Hadoop-FS existence check, NOT java.io.File: a local-only check
     // is silently false on hdfs://s3a:// paths, which would reset the
-    // catalog every run and defeat the P6 idempotent skip entirely
-    if (Publish.pathExists(spark, path)) spark.read.parquet(path)
-    else empty(spark)
+    // catalog every run and defeat the P6 idempotent skip entirely.
+    // The schema is pinned ([[save]] writes exactly it), which spares
+    // the Spark job parquet would run to read it from a footer. With
+    // it pinned, a directory holding no data file (an overwrite that
+    // died before its commit) would read as an empty catalog and
+    // reload everything; it is refused instead.
+    if (Publish.pathExists(spark, path)) {
+      val m = spark.read.schema(Schemas.voterFile).parquet(path)
+      require(m.inputFiles.nonEmpty,
+        s"manifest $path exists but holds no data file " +
+          "(an interrupted save?); restore or remove it")
+      m
+    } else empty(spark)
 }

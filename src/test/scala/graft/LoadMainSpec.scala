@@ -21,4 +21,18 @@ class LoadMainSpec extends AnyFunSuite {
     assert(second === Seq("02--CA--VM2Uniform--2024-02-01.tab"))
     assert(spark.read.parquet(outPath).count() === 7)
   }
+
+  test("a failed symlink while staging the slice leaves no temp dir") {
+    val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def sliceDirs(): Set[String] =
+      Option(tmpRoot.toFile.listFiles()).toSeq.flatten
+        .map(_.getName).filter(_.startsWith("load-slice")).toSet
+    val before = sliceDirs()
+    val f = s"${TestSpark.resource("/voters")}/01--AK--VM2Uniform--2024-01-15.tab"
+    // the second link's name already exists in the slice dir
+    intercept[java.nio.file.FileAlreadyExistsException] {
+      LoadMain.withSliceDir(Seq(f, f))(_ => fail("staging should have failed"))
+    }
+    assert(sliceDirs() === before)
+  }
 }

@@ -21,9 +21,10 @@ class SchemaEvolutionSpec extends AnyFunSuite {
       .withColumn("state", $"st").drop("st")
       .write.partitionBy("state").mode("overwrite").parquet(out)
     // v2: later load carries the new Voters_Gender column (CA only)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    Seq(("LAL3", "F", "CA")).toDF("LALVOTERID", "Voters_Gender", "state")
-      .write.partitionBy("state").mode("overwrite").parquet(out)
+    graft.ops.withConfs(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      Seq(("LAL3", "F", "CA")).toDF("LALVOTERID", "Voters_Gender", "state")
+        .write.partitionBy("state").mode("overwrite").parquet(out)
+    }
     val merged = spark.read.option("mergeSchema", "true").parquet(out)
     assert(merged.columns.toSet === Set("LALVOTERID", "Voters_Gender", "state"))
     val byId = merged.collect()
