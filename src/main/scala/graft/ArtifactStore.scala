@@ -89,6 +89,7 @@ object ArtifactStore {
   def parquet(spark: SparkSession, name: String, inputPath: String,
       version: Int = 1, partitionColumns: Seq[String] = Nil)
       (build: => DataFrame): DataFrame = {
+    val builtBefore = builds
     val dir = parquetDir(spark, name, inputPath, version, partitionColumns)(build)
     // session-keyed RELATION cache (the Tables.relationCache idiom):
     // the address is a content fingerprint, so the directory's
@@ -96,7 +97,9 @@ object ArtifactStore {
     // (listing + footer schema inference, ~100 ms driver latency per
     // call) on every serve is pure waste. The cached object is the
     // resolved logical plan; every action over it still scans the
-    // artifact parquet.
+    // artifact parquet. A build (re)published the address with new
+    // file names, so it replaces the entry and its stale listing.
+    if (builds != builtBefore) relationCache.put((spark, dir), spark.read.parquet(dir))
     relationCache.getOrElseUpdate((spark, dir), spark.read.parquet(dir))
   }
 
@@ -115,7 +118,10 @@ object ArtifactStore {
       version: Int = 1, partitionColumns: Seq[String] = Nil)
       (build: => DataFrame): String =
     serveOrBuild(spark, name, inputPath, version) { tmp =>
-      val w = build.write.mode("overwrite")
+      // static, whatever the session's partitionOverwriteMode: under
+      // dynamic overwrite the committer leaves _SUCCESS in its staging
+      // dir, and the address would read as incomplete forever
+      val w = build.write.mode("overwrite").option("partitionOverwriteMode", "static")
       (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*)
        else w).parquet(tmp.toString)
       // the parquet committer wrote tmp/_SUCCESS itself

@@ -1,28 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // every entrypoint pins UTC (Verify, TestSpark, the probes; sbt
-      // also injects it via javaOptions): timestamp-NTZ→LTZ casts in
-      // the query paths assume a DST-free session zone, and Bench was
-      // the one builder relying on the javaOptions route alone
-      .config("spark.sql.session.timeZone", "UTC")
-      // Local relations (collected beams, memory-sink tables, dim rows)
-      // are DRIVER-HELD bounded data by construction; Spark's default
-      // parallelizes their scans into `defaultParallelism` tasks (32
-      // here), pure dispatch overhead for rows that fit in one task.
-      // Scale-independent: a local relation is small at any SF — it was
-      // collected to the driver. Env-overridable for A/Bs. (r16, guide
-      // §2.2 fewer/larger tasks; measured in OPTIMIZATION_r16.md)
-      .config("spark.sql.leafNodeDefaultParallelism",
-        sys.env.getOrElse("SPARK_GRAFT_LEAF_PARALLELISM", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm up JIT + codegen + parquet reader paths on the smallest SF
     // so the first timed query doesn't absorb ~8 s of JVM warm-up.

@@ -86,6 +86,9 @@ final class BenchMetrics(sc: SparkContext) {
   }
   sc.addSparkListener(listener)
 
+  /** Stop counting: detach the listener from the context. */
+  def close(): Unit = sc.removeSparkListener(listener)
+
   /** Cumulative sums in field order (peak handled separately).
     * cpu rides in ns internally; the ms conversion happens ONCE on
     * the window delta in [[end]], so per-task truncation never

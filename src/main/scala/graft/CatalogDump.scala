@@ -6,8 +6,7 @@ object CatalogDump {
     // (SimilarityOps.generatedOracles); run one training at the
     // smallest SF so the catalog reports them the way a Verify run
     // produces them, not as rows-only
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries("sim_kmeans_sizes")(spark, "/root/testdata/sf0.001").count()
     SparkEntry.queries("sim_pca_project")(spark, "/root/testdata/sf0.001").count()

@@ -182,12 +182,7 @@ object ScaleDataGen {
 
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else defaultDir
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     ensure(spark, outDir = out)
     Tables.all.foreach { t =>

@@ -31,10 +31,6 @@ object Dedup {
       .drop("__rn")
   }
 
-  /** Arbitrary-row dedup, for identical-duplicate streams. */
-  def anyWins(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
-
   /** Incremental sink dedup: drop incoming rows whose key already
     * exists in the sink (ON CONFLICT DO NOTHING re-run semantics). */
   def againstExisting(incoming: DataFrame, existing: DataFrame,

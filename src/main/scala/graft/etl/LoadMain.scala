@@ -22,14 +22,7 @@ object LoadMain {
     require(positional.length == 3,
       "usage: LoadMain <inputDir> <outPath> <manifestPath> [--start N] [--end N] [--tolerance N]")
     val Seq(inputDir, outPath, manifestPath) = positional.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-load")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local().appName("graft-load").getOrCreate()
     try {
       val loaded = run(spark, inputDir, outPath, manifestPath,
         opts.get("start").map(_.toInt), opts.get("end").map(_.toInt),

@@ -66,7 +66,7 @@ object CountMinAgg {
   /** Column API: aggregate a string column into a serialized sketch.
     * Pure — built directly over the aggregate expression; SQL users
     * reach the same aggregate as `graft_countmin` via
-    * GraftFunctions.register / GraftExtensions. */
+    * GraftExtensions. */
   def sketch(c: Column): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       CountMinAgg(org.apache.spark.sql.graftbridge.ColumnBridge.expression(c))

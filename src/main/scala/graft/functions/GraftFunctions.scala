@@ -1,21 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType}
 
-/** Registration + Column-API surface for the custom Catalyst
-  * expressions. Two registration paths:
-  *
-  *  - [[GraftExtensions]] for `SparkSession.builder()
-  *    .withExtensions(new GraftExtensions)` / the
-  *    `spark.sql.extensions` config — the idiomatic deployment.
-  *  - [[GraftFunctions.register]] for an already-built session (used
-  *    by the driver harness, whose session we don't construct).
-  *
-  * Column wrappers go through `call_function` on the registered names,
-  * which resolves to the native expressions at analysis time.
+/** SQL registration + Column-API surface for the custom Catalyst
+  * expressions. [[GraftExtensions]] injects [[all]] into every session
+  * that names it in `spark.sql.extensions`, as [[graft.Sessions]] does;
+  * the Column wrappers build the same expressions directly and need no
+  * registration.
   */
 object GraftFunctions {
 
@@ -77,20 +71,13 @@ object GraftFunctions {
       "graft_countmin(key) - serialized Count-Min Sketch of a string column"),
   )
 
-  /** Idempotently register all custom functions on a live session. */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (name, builder, _) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-
   // The Column wrappers below construct their expressions DIRECTLY
   // (ColumnBridge) rather than via call_function on a registered name:
   // they are pure — no session needs to exist at Column-construction
   // time, no thread-local active-session coupling, no per-call
   // register() side effect (the same fix ADVICE r3 demanded for
-  // Vectors.dot). register()/GraftExtensions remain the path for SQL
-  // users; both resolve to the identical expressions.
+  // Vectors.dot). GraftExtensions remains the path for SQL users; both
+  // resolve to the identical expressions.
   private def br(c: Column): Expression =
     org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)
   private def wrap(e: Expression): Column =

@@ -30,7 +30,7 @@ object Vectors {
     // driver cannot pick up the wrong thread-local active session
     // (the old SparkSession.active registration hack). SQL users
     // still reach the same expression as `graft_dot` via
-    // GraftFunctions.register / GraftExtensions.
+    // GraftExtensions.
     ColumnBridge.column(DotProduct(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 

@@ -43,8 +43,6 @@ object LayoutOps {
 
   // ---------------------------------------------------------------- z-order
 
-  private val ZBits = 32
-
   /** Bit-spread a non-negative int-valued column: x's low 32 bits end
     * up in the even bit positions of the result. The classic 5-step
     * mask-shift ladder — pure builtin bitwise ops, so the whole

@@ -825,29 +825,6 @@ object SimilarityOps {
       .select(col("src"), col("sc.id").as("dst"))
   }
 
-  /** Centroid-seeded NSW entry set (VERDICT r11 #6): for each trained
-    * centroid, the corpus node nearest to it under (round-6 cosine
-    * desc, vec_id asc) — entry points spread across the corpus's
-    * cluster structure instead of an arbitrary id prefix. One
-    * map-side scoring pass (16 literal centroids per node) + a
-    * 16-group argmax (partial-aggregable struct-max, map-side
-    * combine) — no shuffle wider than 16 groups, scale-free. */
-  private[graft] def centroidEntryCandidates(emb: DataFrame,
-      cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    val lits = cents.sortBy(_._1).map { case (cid, ce) =>
-      struct(lit(cid).as("cid"), typedLit(ce).as("ce")) }
-    emb.select(col("vec_id").as("node"), col("embedding"),
-        explode(array(lits: _*)).as("c"))
-      .select(col("node"), col("c").getField("cid").as("cid"),
-        Vectors.cosine6(col("embedding"), col("c").getField("ce"))
-          .as("cos"))
-      .groupBy(col("cid"))
-      .agg(max(struct(col("cos").as("cos"),
-        (-col("node")).as("negnode"))).as("m"))
-      .select((-col("m").getField("negnode")).cast("long").as("node"))
-      .distinct()
-  }
-
   /** The exact all-pairs build — TEST-SIDE CONTROL ONLY (never on a
     * serve or dump path): pins the bucketed build's edge recall at
     * sf ≤ 0.01 in ScalaTest, exactly the role VERDICT r11 #1
@@ -1078,8 +1055,7 @@ object SimilarityOps {
     * corpus-sized relations are scans of whatever the caller serves
     * (artifacts in [[nswTopk]] — VERDICT r11 #3). */
   private[graft] def nswSearchOn(v: DataFrame, undirected: DataFrame,
-      q: DataFrame, entriesOpt: Option[DataFrame] = None,
-      hops: Int = NswHops, broadcastQ: Boolean = true,
+      q: DataFrame, hops: Int = NswHops, broadcastQ: Boolean = true,
       exclude: Option[DataFrame] = None): DataFrame = {
     // broadcastQ: the serving query side (8 rows) is hinted; a
     // MAINTENANCE batch (a corpus fraction in nswAppend) must not be
@@ -1115,8 +1091,7 @@ object SimilarityOps {
       topB(scoredAll.repartition(col("query_id"))
         .groupBy(col("query_id"), col("node"))
         .agg(min(col("score")).as("score")))
-    val entries = entriesOpt.getOrElse(
-      v.orderBy(col("node")).limit(NswBeam).select(col("node")))
+    val entries = v.orderBy(col("node")).limit(NswBeam).select(col("node"))
     // the frontier is |queries|·beam rows — checkpointing it EVERY
     // SECOND hop truncates the otherwise exponentially-replayed
     // lineage (each hop references f twice, so k unchecked hops cost

@@ -371,11 +371,9 @@ object StreamingSessions {
     * so they NEED that batch to flush final windows — leave it on for
     * those. Both confs are captured at query start and restored
     * after. */
-  /** A/B hook for the optimization rounds: override the local
-    * stateful-shuffle partition default without a code edit per
-    * trial. Production sizing guidance is unchanged (see above). */
-  private[graft] val defaultStreamParts: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse(8)
+  /** Local stateful-shuffle partitions (see above); 16 and 32 measured
+    * no better (OPTIMIZATION_r16.md). */
+  private[graft] val defaultStreamParts: Int = 8
 
   /** Checkpoint root for the drive-to-completion runs (r16, guide §6):
     * every micro-batch pays offset-log + commit-log + per-partition

@@ -67,6 +67,42 @@ class ArtifactStoreSpec extends AnyFunSuite {
     } finally sys.props.remove("graft.artifacts.dir")
   }
 
+  test("a partitioned artifact is published complete under dynamic partition overwrite") {
+    val root = isolatedRoot()
+    try ops.withConfs(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      val before = ArtifactStore.builds
+      def serve() = ArtifactStore.parquet(spark, "by_parity", s"$sf/region.parquet",
+          partitionColumns = Seq("parity")) {
+        spark.range(6).select(col("id"), (col("id") % 2).as("parity"))
+      }
+      assert(serve().count() === 6)
+      assert(serve().count() === 6)
+      val addresses = new java.io.File(root, "by_parity").listFiles().toSeq
+      assert(addresses.size === 1, addresses)
+      assert(new java.io.File(addresses.head, "_SUCCESS").exists(),
+        "the published artifact must carry its completeness marker")
+      assert(ArtifactStore.builds === before + 1, "the second serve must not rebuild")
+    } finally sys.props.remove("graft.artifacts.dir")
+  }
+
+  test("a rebuilt address is read afresh, not through the previous build's listing") {
+    val root = isolatedRoot()
+    try {
+      def serve() = ArtifactStore.parquet(spark, "ids", s"$sf/region.parquet") {
+        spark.range(5).toDF("id")
+      }
+      assert(serve().count() === 5)
+      val address = new java.io.File(root, "ids").listFiles().head.toPath
+      val s = java.nio.file.Files.walk(address)
+      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally s.close()
+      val before = ArtifactStore.builds
+      assert(serve().count() === 5)
+      assert(ArtifactStore.builds === before + 1)
+    } finally sys.props.remove("graft.artifacts.dir")
+  }
+
   test("fingerprint changes when the input content changes") {
     val tmp = java.nio.file.Files.createTempDirectory("fp_test").toString
     val df = spark.range(10).select(col("id"))

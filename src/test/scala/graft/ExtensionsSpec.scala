@@ -2,16 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** VERDICT r3 #7: `GraftExtensions` is the stated idiomatic deployment
-  * (`spark.sql.extensions=graft.functions.GraftExtensions`), but only
-  * the `register()` path was exercised. The shared test session now
-  * carries that config (TestSpark) — the reflective `applyExtensions`
-  * path a real cluster uses (`--conf spark.sql.extensions=...`) — and
-  * this suite resolves every injected function on a FRESH
-  * `newSession()`, whose function registry is rebuilt from the
-  * extensions alone: none of the `register()` temp-function calls
-  * other suites make on the shared session exist there, so resolution
-  * proves the injection.
+/** `GraftExtensions` is the one way the `graft_*` SQL functions reach a
+  * session (`spark.sql.extensions=graft.functions.GraftExtensions`, the
+  * reflective `applyExtensions` path a real cluster uses). The shared
+  * test session carries that config through `graft.Sessions`, and this
+  * suite resolves every injected function on a FRESH `newSession()`,
+  * whose function registry is rebuilt from the extensions alone, so
+  * resolution proves the injection.
   */
 class ExtensionsSpec extends AnyFunSuite {
 

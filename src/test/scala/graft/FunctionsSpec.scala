@@ -35,7 +35,6 @@ class FunctionsSpec extends AnyFunSuite {
       .filter(!(col("native") <=> col("ref"))).count()
     assert(diffD === 0)
     // SQL registration path + null array → null
-    GraftFunctions.register(spark)
     df.limit(1).createOrReplaceTempView("dot_t")
     val viaSql = spark.sql(
       "SELECT graft_dot(a, b) AS d, " +
@@ -91,7 +90,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(diffMixed === 0)
     // SQL registration + null semantics: null array, mismatched
     // lengths, and a null ELEMENT all yield NULL (composed-form parity)
-    GraftFunctions.register(spark)
     df.limit(1).createOrReplaceTempView("idot_t")
     val viaSql = spark.sql(
       "SELECT graft_idot(a, b) AS d, graft_inorm2(a) AS n2, " +
@@ -130,14 +128,12 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("native geohash works via SQL registration") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT graft_geohash(57.64911D, 10.40744D, 8) AS g").head()
     assert(r.getString(0) === "u4pruydq")
   }
 
   test("registry accepts BIGINT literals for scalar int args (ADVICE r2)") {
-    GraftFunctions.register(spark)
     // a BIGINT scalar arg (CAST(..) folds to a Long literal) must not
     // ClassCastException — the registry casts via Number.intValue()
     val viaLong = spark.sql(
@@ -380,7 +376,6 @@ class FunctionsSpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("blob",
           org.apache.spark.sql.types.BinaryType))))
-    graft.functions.GraftFunctions.register(spark)
     val out = junk.selectExpr("graft_image_meta(blob) AS m").collect()
     assert(out.head.isNullAt(0))
   }

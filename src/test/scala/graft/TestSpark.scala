@@ -2,20 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run. */
+/** One shared local session for the whole test run: the program's own
+  * session ([[Sessions.local]]) at 4 cores, plus a temporary warehouse. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // deploy the custom expressions the way a real cluster would
-      // (--conf spark.sql.extensions=...): the whole test run then
-      // exercises the reflective injection path, and ExtensionsSpec
-      // asserts per-session resolution with no register() calls
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val s = Sessions.local(4)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .getOrCreate()
