@@ -18,14 +18,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * mtime), so republished input changes the address and forces a
   * rebuild instead of serving stale artifacts. The testdata dirs are
   * read-only, so artifacts live under a writable root
-  * (`SPARK_GRAFT_ARTIFACTS_DIR`, default under java.io.tmpdir), keyed
+  * (`SPARK_GRAFT_ARTIFACTS_DIR`, default under java.io.tmpdir; the
+  * `graft.artifacts.dir` system property beats both, so a test can
+  * isolate its store whatever the environment says), keyed
   * exactly the way `<sf>/_artifacts/<name>/` would be on a writable
   * warehouse.
   */
 object ArtifactStore {
 
-  def root: String = sys.env.get("SPARK_GRAFT_ARTIFACTS_DIR")
-    .orElse(sys.props.get("graft.artifacts.dir")) // test isolation hook
+  def root: String = sys.props.get("graft.artifacts.dir")
+    .orElse(sys.env.get("SPARK_GRAFT_ARTIFACTS_DIR"))
     .getOrElse(System.getProperty("java.io.tmpdir") + "/graft_artifacts")
 
   private val buildCount = new java.util.concurrent.atomic.AtomicLong

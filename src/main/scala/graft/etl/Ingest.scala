@@ -93,27 +93,38 @@ object Ingest {
       .csv(paths: _*)
   }
 
-  /** F1/F2: parse the `NN--ST--rest` grammar from a filename column. */
+  /** F1/F2: parse the `NN--ST--rest` grammar from a filename column —
+    * the text before the first `--`, as an int. Literal `substring_index`,
+    * no regex `split` and no per-row array. A name without `--` is its
+    * own prefix, and no `*.tab` name casts to an int, so under ANSI the
+    * query fails on it. */
   def fileNumber(name: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    split(name, "--").getItem(0).cast("int")
+    substring_index(name, "--", 1).cast("int")
 
+  /** The text between the first and the second `--` (or the end). Cut
+    * after the first `--` before looking for the next: `substring_index`
+    * counts overlapping matches, so `01---ST` must give `-ST` as the
+    * driver's `split("--")` does, not `01-`. */
   def fileState(name: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    split(name, "--").getItem(1)
+    substring_index(name.substr(instr(name, "--") + 2, lit(Int.MaxValue)), "--", 1)
 
   /** Attach source-file metadata columns derived from the input path:
     * basename, numeric file number, state token. The `state` column is
-    * the partition key downstream (SURVEY.md §1.4). */
+    * the partition key downstream (SURVEY.md §1.4); from
+    * `input_file_name()`, which is never null, it is non-nullable, so a
+    * partitioned write adds no `empty2null` projection for it. */
   def withFileMeta(df: DataFrame): DataFrame =
     withFileMetaFrom(df, input_file_name())
 
   /** Same, from an explicit path column (for plans where the file name
-    * was already materialized upstream, e.g. the streaming ingest). */
+    * was already materialized upstream, e.g. the streaming ingest). One
+    * `select`: at the voter schema's width each `Project` is a row copy
+    * of every column. */
   def withFileMetaFrom(df: DataFrame,
       file: org.apache.spark.sql.Column): DataFrame = {
-    val base = element_at(split(file, "/"), -1)
-    df.withColumn("source_file", base)
-      .withColumn("file_number", fileNumber(base))
-      .withColumn("state", fileState(base))
+    val base = substring_index(file, "/", -1)
+    df.select(col("*"), base.as("source_file"),
+      fileNumber(base).as("file_number"), fileState(base).as("state"))
   }
 
   /** P5: the reference skips files whose name contains DEMOGRAPHIC

@@ -12,9 +12,17 @@ import org.apache.spark.sql.functions._
   *   first-wins PK dedup (A3) → partitioned publish (D2) →
   *   reconciliation report (A1/A4).
   *
-  * Everything before the dedup shuffle is narrow — scan, project,
-  * derive fuse into one WholeStageCodegen stage per input split,
-  * mirroring the reference's single-pass stream (SURVEY.md §3.4). The
+  * Everything before the dedup shuffle is narrow — scan, file
+  * metadata and derive run in one stage per input split, mirroring the
+  * reference's single-pass stream (SURVEY.md §3.4). At 339 columns
+  * that stage is not whole-stage codegen'd (more than
+  * `spark.sql.codegen.maxFields`, 100): each `Project` is a separate
+  * row copy of every column. So each narrow step is ONE `select`: the
+  * file metadata one (its `input_file_name()` is non-deterministic, so
+  * Catalyst keeps it apart), and derive one, which the dedup's `__seq`
+  * joins. Above the dedup shuffle the drops and the widen collapse
+  * into one more, and a non-nullable `state` spares the writer its own
+  * `empty2null` projection: three `Project` row copies per voter. The
   * only exchange is the PK dedup; publish repartitions by `state` so
   * each output partition is written by one task.
   */
@@ -60,13 +68,14 @@ object LoadPipeline {
     * ingest paths — one definition so they cannot drift): projection +
     * coercion on present columns only (the 300+ absent schema columns
     * become typed NULLs only after the dedup shuffle), city cleanup,
-    * geohash derive. */
+    * geohash derive — one `Project`, each column coerced once. The
+    * geohash replaces an input `Residence_Addresses_GeoHash` in place,
+    * or is appended after `meta` when the input has none. */
   def derive(raw: DataFrame): DataFrame =
-    Normalize.project(raw, passthrough = meta)
-      .withColumn("City", Normalize.stripEstMarker(col("City")))
-      .withColumn("Residence_Addresses_GeoHash",
-        Geo.geohash8Native(col("Residence_Addresses_Latitude"),
-          col("Residence_Addresses_Longitude")))
+    Normalize.project(raw, passthrough = meta, derived = c => Seq(
+      "City" -> Normalize.stripEstMarker(c("City")),
+      "Residence_Addresses_GeoHash" -> Geo.geohash8Native(
+        c("Residence_Addresses_Latitude"), c("Residence_Addresses_Longitude"))))
 
   /** A3: the reference keeps the first-inserted row per LALVOTERID;
     * file order (numeric prefix) then in-file order is the insert

@@ -9,8 +9,12 @@ import org.apache.spark.sql.types._
   * The reference's per-row `processRowData` (load.ts:28-46): drop
   * fields not in the schema, empty string → null, `Number(v)` for Int
   * fields, `new Date(v)` for DateTime fields. Here the same schema map
-  * drives a single generated projection — one codegen'd `Project`
-  * node, no per-row interpretation.
+  * drives a single `Project` node, no per-row interpretation. At more
+  * than `spark.sql.codegen.maxFields` (100) fields — the voter schema
+  * has 339 — whole-stage codegen is off, and each `Project` runs as
+  * its own generated row copy of every column. So each narrow step of
+  * the load is one `Project` (see `LoadPipeline`), and `project` takes
+  * the derived columns instead of leaving them to a second one.
   *
   * Documented JS→Spark semantic deltas (SURVEY.md §7.4):
   *  - `Number("junk")` produced NaN (which Postgres then rejected);
@@ -50,14 +54,29 @@ object Normalize {
     * the input, coerced. Downstream shuffles (dedup) should run on
     * this — shuffling the 328 constant-NULL absent columns of a
     * partial extract costs real bytes for no information (measured
-    * ~25% of load wall-time on a 11-column extract). */
+    * ~25% of load wall-time on a 11-column extract).
+    *
+    * `derived` computes further columns from the coerced ones (looked
+    * up by schema name; a name the input lacks resolves against `df`
+    * and fails analysis): a derived name the input has replaces its
+    * coerced column in place, any other is appended after
+    * `passthrough`. All of it is ONE `Project`: a derivation reads the
+    * coerced expressions themselves, not the output of a second
+    * row-wide projection (the generated projection evaluates a
+    * repeated coercion once). */
   def project(df: DataFrame, schema: StructType = Schemas.voter,
-      passthrough: Seq[String] = Seq.empty): DataFrame = {
+      passthrough: Seq[String] = Seq.empty,
+      derived: (String => Column) => Seq[(String, Column)] = _ => Nil): DataFrame = {
     val present = df.columns.map(c => c.trim -> c).toMap
-    val projected = schema.fields.flatMap { f =>
-      present.get(f.name).map(src => coerce(col(src), f.dataType).as(f.name))
+    val coerced = schema.fields.toSeq.flatMap { f =>
+      present.get(f.name).map(src => f.name -> coerce(col(src), f.dataType))
     }
-    df.select((projected ++ passthrough.map(col)).toIndexedSeq: _*)
+    val byName = coerced.toMap
+    val extra = derived(n => byName.getOrElse(n, col(n)))
+    val replaced = extra.toMap
+    val inPlace = coerced.map { case (n, c) => replaced.getOrElse(n, c).as(n) }
+    val appended = extra.collect { case (n, c) if !byName.contains(n) => c.as(n) }
+    df.select(inPlace ++ passthrough.map(col) ++ appended: _*)
   }
 
   /** The widening half: add the schema columns the input lacks as

@@ -1,6 +1,8 @@
 package graft
 
 import graft.etl.{Ingest, LoadPipeline, Manifest, Quality}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class IngestUtilSpec extends AnyFunSuite {
@@ -43,5 +45,39 @@ class IngestUtilSpec extends AnyFunSuite {
     val msgs = Quality.alerts(
       Quality.loadReport(result.loaded, result.loaded, m, tolerance = 10))
     assert(msgs === Seq("Error: state CA loaded 3 rows, expected 2000"))
+  }
+
+  /** The regex-`split` parse of F1/F2 the literal one must agree with. */
+  private def splitMeta(file: Column): Seq[Column] = {
+    val base = element_at(split(file, "/"), -1)
+    Seq(base, split(base, "--").getItem(0).cast("int"), split(base, "--").getItem(1))
+  }
+
+  test("F1/F2: file metadata equals the split-based parse, spaces and extra `--` included") {
+    import spark.implicits._
+    val paths = Seq(
+      "file:/data/in%20dir/07--NY--VM2%20Uniform--2024-01-15.tab",
+      "file:///data/12--TX--a--b.tab",
+      "s3a://bucket/k/01---ST--x.tab", // overlapping `--`: the state is `-ST`
+      "03--CA.tab")
+    val df = paths.toDF("p")
+    val got = Ingest.withFileMetaFrom(df, col("p"))
+      .select(col("source_file"), col("file_number"), col("state"))
+    val want = df.select(splitMeta(col("p")): _*)
+    assert(got.collect().toSeq === want.collect().toSeq)
+    assert(got.collect().map(_.getString(2)).toSeq === Seq("NY", "TX", "-ST", "CA.tab"))
+  }
+
+  test("F1/F2: metadata from input_file_name(): %20-encoded name, non-nullable state") {
+    val dir = java.nio.file.Files.createTempDirectory("in dir")
+    val f = dir.resolve("07--NY--VM2 Uniform--a--b.tab")
+    java.nio.file.Files.writeString(f, "LALVOTERID\tCity\nLALNY1\tALBANY\n")
+    val df = Ingest.withFileMeta(Ingest.readTsv(spark, Seq(f.toString)))
+    assert(!df.schema("state").nullable)
+    val got = df.select(col("source_file"), col("file_number"), col("state")).head()
+    val want = df.select(splitMeta(input_file_name()): _*).head()
+    assert(got === want)
+    assert(got.getString(0) === "07--NY--VM2%20Uniform--a--b.tab")
+    assert(got.getInt(1) === 7 && got.getString(2) === "NY")
   }
 }

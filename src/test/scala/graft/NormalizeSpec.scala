@@ -1,6 +1,6 @@
 package graft
 
-import graft.etl.Normalize
+import graft.etl.{LoadPipeline, Normalize}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, IntegerType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -54,5 +54,39 @@ class NormalizeSpec extends AnyFunSuite {
     val df = Seq(("LAL1", "smith")).toDF(" LALVOTERID ", "Voters_LastName")
     val norm = Normalize.normalize(df)
     assert(norm.select($"LALVOTERID").head().getString(0) === "LAL1")
+  }
+
+  private val geo = "Residence_Addresses_GeoHash"
+
+  test("derive: a geohash the input lacks is appended after the metadata") {
+    val raw = Seq(("LAL1", "57.64911", "10.40744", "NOME (EST.)", "a.tab", 1, "AK"))
+      .toDF(Seq("LALVOTERID", "Residence_Addresses_Latitude",
+        "Residence_Addresses_Longitude", "City") ++ LoadPipeline.meta: _*)
+    val d = LoadPipeline.derive(raw)
+    val present = etl.Schemas.voter.fieldNames.filter(raw.columns.contains).toSeq
+    assert(d.columns.toSeq === present ++ LoadPipeline.meta :+ geo)
+    val r = d.head()
+    assert(r.getAs[String](geo) === "u4pruydq")
+    assert(r.getAs[String]("City") === "NOME")
+  }
+
+  test("derive: an input geohash keeps its place and is recomputed") {
+    val raw = Seq(("LAL1", "stale", "57.64911", "10.40744", "NOME", "a.tab", 1, "AK"))
+      .toDF(Seq("LALVOTERID", geo, "Residence_Addresses_Latitude",
+        "Residence_Addresses_Longitude", "City") ++ LoadPipeline.meta: _*)
+    val d = LoadPipeline.derive(raw)
+    val present = etl.Schemas.voter.fieldNames.filter(raw.columns.contains).toSeq
+    assert(d.columns.toSeq === present ++ LoadPipeline.meta)
+    assert(d.head().getAs[String](geo) === "u4pruydq")
+  }
+
+  test("derive: whitespace-padded header names still bind") {
+    val raw = Seq(("LAL1", "57.64911", "10.40744", " JUNEAU (EST.)", "a.tab", 1, "AK"))
+      .toDF(Seq(" LALVOTERID", "Residence_Addresses_Latitude ",
+        "  Residence_Addresses_Longitude", " City ") ++ LoadPipeline.meta: _*)
+    val r = LoadPipeline.derive(raw).head()
+    assert(r.getAs[String]("LALVOTERID") === "LAL1")
+    assert(r.getAs[String]("City") === " JUNEAU")
+    assert(r.getAs[String](geo) === "u4pruydq")
   }
 }

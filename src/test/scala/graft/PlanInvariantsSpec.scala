@@ -909,15 +909,6 @@ class PlanInvariantsSpec extends AnyFunSuite {
       "dedup_lsh_append", "text_lm_score", "mm_scene_cuts",
       "mm_build_report", "mm_phash_append", "corpus_build_report",
       "geo_dbscan")
-    // ArtifactStore.root PREFERS the env var over the sys-prop hook
-    // (ADVICE r14): with SPARK_GRAFT_ARTIFACTS_DIR set the isolated
-    // dir below would be silently ignored, the store would stay warm,
-    // and this test would fail its non-vacuity assert with a message
-    // that doesn't name the cause — fail fast instead.
-    assume(sys.env.get("SPARK_GRAFT_ARTIFACTS_DIR").isEmpty,
-      "SPARK_GRAFT_ARTIFACTS_DIR is set and shadows the " +
-        "graft.artifacts.dir isolation hook — unset it to run the " +
-        "cold-store sweep")
     val dir = java.nio.file.Files
       .createTempDirectory("plan-cold-store").toString
     val captured = scala.collection.mutable.Buffer
@@ -963,9 +954,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
       } catch { case _: java.io.IOException => () }
     }
     assert(ArtifactStore.builds > before,
-      "cold store triggered no artifact builds — the sweep is vacuous " +
-        "(note: SPARK_GRAFT_ARTIFACTS_DIR would shadow the isolation " +
-        "hook; the assume above should have caught that)")
+      "cold store triggered no artifact builds — the sweep is vacuous")
     val plans = captured.synchronized { captured.toList }
       .filterNot(_._1 == "<pre>")
     val pairOffenders = plans.collect {

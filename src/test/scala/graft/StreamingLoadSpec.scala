@@ -42,6 +42,24 @@ class StreamingLoadSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("collides"))
   }
 
+  test("ingestBatch fails a file whose name lacks the `--` grammar") {
+    val dir = java.nio.file.Files.createTempDirectory("no-grammar")
+    writeFile(dir, "voters.tab", Seq(
+      "LALAK1\tANNA\tF\t01/15/2010\t61.2\t-149.9\tANCHORAGE"))
+    val schema = org.apache.spark.sql.types.StructType(header.map(
+      org.apache.spark.sql.types.StructField(_,
+        org.apache.spark.sql.types.StringType, nullable = true)))
+    val batch = spark.read.text(dir.resolve("voters.tab").toString)
+      .select(col("value"), input_file_name().as("__file"))
+    val out = dir.resolve("pub").toString
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    val ex = intercept[Exception] {
+      graft.streaming.StreamingLoad.ingestBatch(batch, schema, out)
+    }
+    assert(ex.isInstanceOf[org.apache.spark.SparkThrowable], ex)
+    assert(!new java.io.File(out).exists(), "nothing may be published")
+  }
+
   test("continuous ingest: files land incrementally, dedup spans batches") {
     val in = java.nio.file.Files.createTempDirectory("stream-in")
     val out = java.nio.file.Files.createTempDirectory("stream-out")

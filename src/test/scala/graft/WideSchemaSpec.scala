@@ -179,6 +179,30 @@ class WideSchemaSpec extends AnyFunSuite {
     } finally published.cache()
   }
 
+  test("full-width publish plan: one row copy per side of the dedup shuffle") {
+    // At 339 columns whole-stage codegen is off (spark.sql.codegen.maxFields
+    // is 100), so every Project node copies every column of every row.
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val files = LoadPipeline.listDataFiles(spark, fixtureDir)
+    // a nullable partition column costs the writer its own empty2null Project
+    assert(!Ingest.withFileMeta(Ingest.readTsv(spark, files)).schema("state").nullable)
+    val wide = LoadPipeline.run(spark, fixtureDir).loaded
+    val plan = ops.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
+      wide.repartition($"state").queryExecution.executedPlan
+    }
+    def projects(p: SparkPlan): Int = p.collect { case x: ProjectExec => x }.size
+    val dedup = plan.collectFirst {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning => h.references.exists(_.name == "LALVOTERID")
+        case _ => false
+      }) => e
+    }.getOrElse(fail(s"no LALVOTERID exchange in\n$plan"))
+    assert(projects(dedup) <= 2, s"row copies below the dedup shuffle:\n$plan")
+    assert(projects(plan) - projects(dedup) <= 1, s"row copies above it:\n$plan")
+  }
+
   test("reconciled manifest: both files Loaded; re-run loads nothing") {
     published.count() // force the first catalog run
     val tmpManifest = new java.io.File(out).getParentFile.toPath
