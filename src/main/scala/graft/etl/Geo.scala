@@ -72,58 +72,11 @@ object Geo {
     * the special literals try_cast additionally accepts, ±"inf"/NaN,
     * encode to NULL anyway via the range guard) feeding the native
     * `GeohashEncode` expression. Keeps the voter load's derive stage
-    * — batch AND streaming — inside WholeStageCodegen instead of
-    * fencing every row through a Scala closure; bit-identical output
+    * in generated code instead of fencing every row through a Scala
+    * closure; bit-identical output
     * is asserted by the differential test in GeohashSpec. */
   def geohash8Native(lat: Column, lon: Column): Column =
     graft.functions.GraftFunctions.geohash(
       lat.try_cast(org.apache.spark.sql.types.DoubleType),
       lon.try_cast(org.apache.spark.sql.types.DoubleType), 8)
-
-  /** Geohash cell cover of a lat/lon box: the distinct precision-p
-    * prefixes of every cell intersecting the box. Filtering a geohash
-    * column with `startswith(any cover prefix)` turns a spatial box
-    * query into prefix ranges — sargable against parquet min/max
-    * stats and geohash-prefix partitioning; the 100 TB answer to the
-    * reference's 251 B-tree indexes for geo lookups. Cover size is
-    * bounded by the cell grid at precision p; keep p small (≤4) for
-    * box filters. */
-  def coverBox(minLat: Double, maxLat: Double, minLon: Double,
-      maxLon: Double, precision: Int): Seq[String] = {
-    // cell sizes halve per bit; at precision p: 5p bits, lon gets ceil.
-    // Iterate CELL INDICES of the box's corners (inclusive), never
-    // stepped coordinates — stepping by a cell size from an unaligned
-    // box minimum skips the final row/column of cells (a silent
-    // false-negative filter; caught in review).
-    val bits = 5 * precision
-    val lonBits = (bits + 1) / 2
-    val latBits = bits / 2
-    val dLat = 180.0 / (1L << latBits)
-    val dLon = 360.0 / (1L << lonBits)
-    def clampLat(x: Double) = math.min(90.0 - 1e-12, math.max(-90.0, x))
-    def clampLon(x: Double) = math.min(180.0 - 1e-12, math.max(-180.0, x))
-    val iLat0 = math.floor((clampLat(minLat) + 90.0) / dLat).toLong
-    val iLat1 = math.floor((clampLat(maxLat) + 90.0) / dLat).toLong
-    val iLon0 = math.floor((clampLon(minLon) + 180.0) / dLon).toLong
-    val iLon1 = math.floor((clampLon(maxLon) + 180.0) / dLon).toLong
-    val out = Seq.newBuilder[String]
-    var i = iLat0
-    while (i <= iLat1) {
-      var j = iLon0
-      while (j <= iLon1) {
-        out += encode(-90.0 + (i + 0.5) * dLat, -180.0 + (j + 0.5) * dLon,
-          precision)
-        j += 1
-      }
-      i += 1
-    }
-    out.result().distinct
-  }
-
-  /** Predicate: geohash column falls inside the box's cell cover. */
-  def inBox(geohash: Column, minLat: Double, maxLat: Double,
-      minLon: Double, maxLon: Double, precision: Int): Column =
-    coverBox(minLat, maxLat, minLon, maxLon, precision)
-      .map(p => geohash.startsWith(p))
-      .reduce(_ || _)
 }

@@ -112,54 +112,12 @@ object Ingest {
     * basename, numeric file number, state token. The `state` column is
     * the partition key downstream (SURVEY.md §1.4); from
     * `input_file_name()`, which is never null, it is non-nullable, so a
-    * partitioned write adds no `empty2null` projection for it. */
-  def withFileMeta(df: DataFrame): DataFrame =
-    withFileMetaFrom(df, input_file_name())
-
-  /** Same, from an explicit path column (for plans where the file name
-    * was already materialized upstream, e.g. the streaming ingest). One
+    * partitioned write adds no `empty2null` projection for it. One
     * `select`: at the voter schema's width each `Project` is a row copy
     * of every column. */
-  def withFileMetaFrom(df: DataFrame,
-      file: org.apache.spark.sql.Column): DataFrame = {
-    val base = substring_index(file, "/", -1)
+  def withFileMeta(df: DataFrame): DataFrame = {
+    val base = substring_index(input_file_name(), "/", -1)
     df.select(col("*"), base.as("source_file"),
       fileNumber(base).as("file_number"), fileState(base).as("state"))
-  }
-
-  /** P5: the reference skips files whose name contains DEMOGRAPHIC
-    * (load.ts:94-96). Applied to a listing DataFrame of file names. */
-  def isDataFile(name: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    !name.contains("DEMOGRAPHIC") && name.contains(".tab")
-
-  /** S3: unzip a staged archive (utils.ts:43-51 — the reference
-    * extracts each downloaded zip before parsing). Staging-side
-    * utility: runs on the driver/edge, not a distributed op — archives
-    * are per-state files, data-parallelism starts at the TSV scan. */
-  def unzip(zipPath: String, outDir: String): Seq[String] = {
-    val zf = new java.util.zip.ZipFile(zipPath)
-    try {
-      val entries = scala.jdk.CollectionConverters
-        .EnumerationHasAsScala(zf.entries()).asScala.toSeq
-      entries.filterNot(_.isDirectory).map { e =>
-        val out = java.nio.file.Paths.get(outDir, new java.io.File(e.getName).getName)
-        java.nio.file.Files.createDirectories(out.getParent)
-        val in = zf.getInputStream(e)
-        try java.nio.file.Files.copy(in, out,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        finally in.close()
-        out.toString
-      }
-    } finally zf.close()
-  }
-
-  /** P11/W1 (download.ts:48-57): among files sharing a state token,
-    * only the newest (highest name, i.e. latest date suffix) survives;
-    * older versions are stale and deleted before a new download.
-    * Returns (keep, stale) name lists, deterministically. */
-  def splitStaleVersions(names: Seq[String]): (Seq[String], Seq[String]) = {
-    val byState = names.groupBy(n => n.split("--").lift(1).getOrElse(""))
-    val keep = byState.values.map(_.max).toSeq.sorted
-    (keep, names.diff(keep).sorted)
   }
 }

@@ -64,13 +64,12 @@ object LoadPipeline {
   /** Metadata columns carried alongside voter data through the load. */
   val meta: Seq[String] = Seq("source_file", "file_number", "state")
 
-  /** The shared narrow transform (used by BOTH the batch and streaming
-    * ingest paths — one definition so they cannot drift): projection +
-    * coercion on present columns only (the 300+ absent schema columns
-    * become typed NULLs only after the dedup shuffle), city cleanup,
-    * geohash derive — one `Project`, each column coerced once. The
-    * geohash replaces an input `Residence_Addresses_GeoHash` in place,
-    * or is appended after `meta` when the input has none. */
+  /** The narrow transform: projection + coercion on present columns
+    * only (the 300+ absent schema columns become typed NULLs only after
+    * the dedup shuffle), city cleanup, geohash derive — one `Project`,
+    * each column coerced once. The geohash replaces an input
+    * `Residence_Addresses_GeoHash` in place, or is appended after
+    * `meta` when the input has none. */
   def derive(raw: DataFrame): DataFrame =
     Normalize.project(raw, passthrough = meta, derived = c => Seq(
       "City" -> Normalize.stripEstMarker(c("City")),

@@ -84,11 +84,6 @@ object Manifest {
       manifest.filter(col("Loaded")).select(col("Filename")),
       files("name") === col("Filename"), "left_anti")
 
-  /** P7: expected line count for one file (broadcast point filter). */
-  def expectedLines(manifest: DataFrame, filename: String): Option[Int] =
-    manifest.filter(col("Filename") === filename)
-      .select(col("Lines")).collect().headOption.map(_.getInt(0))
-
   /** Persist / restore the catalog (tiny table: read-modify-write). */
   def save(manifest: DataFrame, path: String): Unit = {
     // localCheckpoint-free safe rewrite: materialize before overwrite

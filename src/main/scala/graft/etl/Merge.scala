@@ -19,10 +19,4 @@ object Merge {
       updates.select(col(key)).distinct(), Seq(key), "left_anti")
     updates.unionByName(kept.select(updates.columns.toIndexedSeq.map(col): _*))
   }
-
-  /** Delete-matched: existing rows whose key appears in `tombstones`
-    * are dropped (GDPR-style deletes over immutable files). */
-  def deleteMatched(existing: DataFrame, tombstones: DataFrame,
-      key: String): DataFrame =
-    existing.join(tombstones.select(col(key)).distinct(), Seq(key), "left_anti")
 }

@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Atomic publish (SURVEY.md §2.6 D1/D2).
+/** Per-state publish (SURVEY.md §2.6 D1/D2).
   *
   * The reference loads into `Voter{ST}Temp` then does a
   * rename-rename-drop swap under a 1 h statement timeout
@@ -11,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * overwrite — each `state=ST` partition is written to a staging
   * location and committed atomically by the file output committer;
   * untouched states' partitions survive. One table, 51 partitions,
-  * no table-name dispatch.
+  * no table-name dispatch. A full reload (D1) is the same write with
+  * every state present.
   */
 object Publish {
 
@@ -37,67 +38,11 @@ object Publish {
       .parquet(path)
   }
 
-  /** Incremental append into the partitioned layout (streaming ingest:
-    * a later file for an already-published state must ADD rows, not
-    * replace the partition — upstream dedup guarantees key
-    * uniqueness). */
-  def appendPartitioned(df: DataFrame, path: String): Unit =
-    df.repartition(org.apache.spark.sql.functions.col("state"))
-      .write
-      .mode("append")
-      .partitionBy("state")
-      .parquet(path)
-
-  /** D1: full truncate-and-reload of the target (static overwrite).
-    * The pre-write repartition is load-bearing exactly as in
-    * [[publishPartitioned]]: without it every upstream task writes a
-    * file into every state dir (tasks × states small files). */
-  def replaceAll(df: DataFrame, path: String): Unit =
-    df.repartition(org.apache.spark.sql.functions.col("state"))
-      .write
-      .option("partitionOverwriteMode", "static")
-      .mode("overwrite").partitionBy("state").parquet(path)
-
   /** Existence check through the Hadoop filesystem of the PATH — a
     * `java.io.File` check is silently false for hdfs://, s3a://, etc.,
     * which would disable any logic gated on it (review finding). */
   def pathExists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
-  /** Compaction for append-mode sinks: streaming ingest adds at least
-    * one file per state per micro-batch; periodically rewrite the
-    * layout into one file per state.
-    *
-    * Swap order is crash-safe: write compacted data aside, rename the
-    * LIVE dir out of the way, rename the compacted dir in, then delete
-    * the old copy. At every instant at least one complete copy of the
-    * data exists on disk (a crash leaves it in `.old` or
-    * `.compacting`, never stranded mid-delete). There remains a
-    * sub-second window between the two renames where `path` itself is
-    * absent — callers needing strictly gap-free reads must schedule
-    * compaction in a read-quiescent window (directory rename is not
-    * atomic-swap on HDFS/S3). */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val tmp = new Path(path + ".compacting")
-    val old = new Path(path + ".old")
-    val live = new Path(path)
-    val df = spark.read.parquet(path)
-    df.repartition(org.apache.spark.sql.functions.col("state"))
-      .write.mode("overwrite").partitionBy("state").parquet(tmp.toString)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(old, true) // clear leftovers from a previous crash
-    // Hadoop rename reports most failures by RETURNING FALSE, not
-    // throwing; proceeding past a false (e.g. rename-into-existing
-    // nests the source INSIDE the target on HDFS) silently duplicates
-    // or strands the table, so every step is checked.
-    if (!fs.rename(live, old))
-      throw new java.io.IOException(s"compact: rename $live -> $old failed")
-    if (!fs.rename(tmp, live)) {
-      fs.rename(old, live) // restore the live table before giving up
-      throw new java.io.IOException(s"compact: rename $tmp -> $live failed")
-    }
-    fs.delete(old, true)
   }
 }

@@ -52,13 +52,9 @@ object Quality {
       .orderBy(col("state"))
   }
 
-  /** S8 analog: raw line count of a text file (minus header). */
-  def lineCount(spark: SparkSession, path: String): Long =
-    spark.read.text(path).count() - 1
-
-  /** Per-file line counts (minus headers) in ONE distributed job —
-    * N sequential `lineCount` calls re-scan the input N times and pay
-    * N job round-trips. */
+  /** S8 analog: per-file line counts (minus headers) in ONE
+    * distributed job over every path, not one scan and one job per
+    * file. */
   def lineCounts(spark: SparkSession, paths: Seq[String]): Map[String, Long] = {
     import org.apache.spark.sql.functions.{count => cnt, _}
     // input_file_name() is a URI: a filename with a space (legal in

@@ -513,11 +513,7 @@ object Analytics {
     // output is identical to v1's, so the address is unchanged
     graft.ArtifactStore.parquet(s, "graph_lpa_summary",
         s"$d/lineitem.parquet") {
-      lpaLabels(s, d)
-        .groupBy(col("label").as("community"))
-        .agg(count(lit(1)).as("size"))
-        .orderBy(col("size").desc, col("community"))
-        .limit(20)
+      topCommunities(lpaLabels(s, d))
     }.orderBy(col("size").desc, col("community"))
 
   /** The full LPA labeling as a content-addressed artifact —
@@ -533,12 +529,11 @@ object Analytics {
       lpaLabelsOn(partEdges(s, d))
     }
 
-  /** Core of [[labelPropagation]] over any symmetric (src, dst) edge
-    * frame — parameterized for known-graph tests. Returns the 20
-    * largest communities (size desc, label asc — a total order, so
-    * the cut is deterministic). */
-  private[graft] def lpaOn(edges: DataFrame): DataFrame =
-    lpaLabelsOn(edges)
+  /** The [[labelPropagation]] summary of a `(node, label)` labeling:
+    * the 20 largest communities (size desc, label asc — a total order,
+    * so the cut is deterministic). */
+  private[graft] def topCommunities(labels: DataFrame): DataFrame =
+    labels
       .groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("size"))
       .orderBy(col("size").desc, col("community"))

@@ -11,15 +11,8 @@ class ArtifactStoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
 
-  private def isolatedRoot(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_art_test").toString
-    sys.props("graft.artifacts.dir") = dir
-    dir
-  }
-
   test("kmeans model: build once, cold-serve from the store, identical model") {
-    isolatedRoot()
-    try {
+    TestSpark.withArtifactRoot { _ =>
       ops.SimilarityOps.clearKmeansMemoryCache()
       val before = ArtifactStore.builds
       val first = ops.SimilarityOps.kmeansSizes(spark, sf).collect().toSeq
@@ -33,12 +26,11 @@ class ArtifactStoreSpec extends AnyFunSuite {
       // and the trained-centroid read path serves the same index
       assert(ops.SimilarityOps.ivfTrained(spark, sf).count() > 0)
       assert(ArtifactStore.builds === before + 1)
-    } finally sys.props.remove("graft.artifacts.dir")
+    }
   }
 
   test("pq codebooks: build once, cold-serve from the store, identical result") {
-    isolatedRoot()
-    try {
+    TestSpark.withArtifactRoot { _ =>
       ops.SimilarityOps.clearPqMemoryCache()
       val before = ArtifactStore.builds
       val first = ops.SimilarityOps.pqTopk(spark, sf).collect().toSeq
@@ -50,12 +42,11 @@ class ArtifactStoreSpec extends AnyFunSuite {
       assert(ArtifactStore.builds === before + 2,
         "second call must serve stored codebooks AND codes, not retrain")
       assert(first === second)
-    } finally sys.props.remove("graft.artifacts.dir")
+    }
   }
 
   test("near-dup cluster map: one build feeds all three consumers") {
-    isolatedRoot()
-    try {
+    TestSpark.withArtifactRoot { _ =>
       val before = ArtifactStore.builds
       val a = ops.DedupOps.clusters(spark, sf).count()
       assert(ArtifactStore.builds === before + 1)
@@ -64,30 +55,30 @@ class ArtifactStoreSpec extends AnyFunSuite {
       assert(a > 0 && b > 0 && c > 0)
       assert(ArtifactStore.builds === before + 1,
         "consumers after the first must serve the stored cluster map")
-    } finally sys.props.remove("graft.artifacts.dir")
+    }
   }
 
   test("a partitioned artifact is published complete under dynamic partition overwrite") {
-    val root = isolatedRoot()
-    try ops.withConfs(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
-      val before = ArtifactStore.builds
-      def serve() = ArtifactStore.parquet(spark, "by_parity", s"$sf/region.parquet",
-          partitionColumns = Seq("parity")) {
-        spark.range(6).select(col("id"), (col("id") % 2).as("parity"))
+    TestSpark.withArtifactRoot { root =>
+      ops.withConfs(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        val before = ArtifactStore.builds
+        def serve() = ArtifactStore.parquet(spark, "by_parity", s"$sf/region.parquet",
+            partitionColumns = Seq("parity")) {
+          spark.range(6).select(col("id"), (col("id") % 2).as("parity"))
+        }
+        assert(serve().count() === 6)
+        assert(serve().count() === 6)
+        val addresses = new java.io.File(root, "by_parity").listFiles().toSeq
+        assert(addresses.size === 1, addresses)
+        assert(new java.io.File(addresses.head, "_SUCCESS").exists(),
+          "the published artifact must carry its completeness marker")
+        assert(ArtifactStore.builds === before + 1, "the second serve must not rebuild")
       }
-      assert(serve().count() === 6)
-      assert(serve().count() === 6)
-      val addresses = new java.io.File(root, "by_parity").listFiles().toSeq
-      assert(addresses.size === 1, addresses)
-      assert(new java.io.File(addresses.head, "_SUCCESS").exists(),
-        "the published artifact must carry its completeness marker")
-      assert(ArtifactStore.builds === before + 1, "the second serve must not rebuild")
-    } finally sys.props.remove("graft.artifacts.dir")
+    }
   }
 
   test("a rebuilt address is read afresh, not through the previous build's listing") {
-    val root = isolatedRoot()
-    try {
+    TestSpark.withArtifactRoot { root =>
       def serve() = ArtifactStore.parquet(spark, "ids", s"$sf/region.parquet") {
         spark.range(5).toDF("id")
       }
@@ -100,7 +91,28 @@ class ArtifactStoreSpec extends AnyFunSuite {
       val before = ArtifactStore.builds
       assert(serve().count() === 5)
       assert(ArtifactStore.builds === before + 1)
-    } finally sys.props.remove("graft.artifacts.dir")
+    }
+  }
+
+  test("an isolated artifact root restores a preset graft.artifacts.dir") {
+    val key = "graft.artifacts.dir"
+    val prev = sys.props.get(key)
+    val preset = java.nio.file.Files.createTempDirectory("graft-art-preset").toString
+    sys.props(key) = preset
+    try {
+      TestSpark.withArtifactRoot { dir =>
+        assert(dir !== preset)
+        assert(ArtifactStore.root === dir)
+      }
+      assert(ArtifactStore.root === preset)
+      intercept[IllegalStateException] {
+        TestSpark.withArtifactRoot[Unit](_ => throw new IllegalStateException("body"))
+      }
+      assert(ArtifactStore.root === preset)
+    } finally prev match {
+      case Some(v) => sys.props(key) = v
+      case None => sys.props.remove(key)
+    }
   }
 
   test("fingerprint changes when the input content changes") {

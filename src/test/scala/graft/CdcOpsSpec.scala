@@ -15,16 +15,14 @@ class CdcOpsSpec extends AnyFunSuite {
     df.collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet
 
   test("merge-on-read, copy-on-write, and full-outer MERGE all agree") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc").toString
-    sys.props("graft.artifacts.dir") = dir
-    try {
+    TestSpark.withArtifactRoot { _ =>
       val mor = rows(ops.CdcOps.readMergeOnRead(spark, sf))
       val cow = rows(ops.CdcOps.mergeApply(spark, sf))
       val joined = rows(ops.CdcOps.applyByJoin(spark, sf))
       assert(mor.nonEmpty)
       assert(mor == cow, "copy-on-write compaction diverged from merge-on-read")
       assert(mor == joined, "union-window merge diverged from the full-outer MERGE form")
-    } finally sys.props.remove("graft.artifacts.dir")
+    }
   }
 
   test("winning deletes vanish; insert-branch keys arrive as cdc rows") {
@@ -101,15 +99,13 @@ class CdcOpsSpec extends AnyFunSuite {
   }
 
   test("copy-on-write compaction builds once, then serves from the store") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc2").toString
-    sys.props("graft.artifacts.dir") = dir
-    try {
+    TestSpark.withArtifactRoot { _ =>
       ops.CdcOps.mergeApply(spark, sf).count()
       val after = ArtifactStore.builds
       ops.CdcOps.mergeApply(spark, sf).count()
       assert(ArtifactStore.builds == after,
         "second read rebuilt the compacted snapshot instead of serving it")
-    } finally sys.props.remove("graft.artifacts.dir")
+    }
   }
 
   test("merge-on-read plan: no join, one hash exchange before the sort") {

@@ -8,35 +8,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class IngestUtilSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("S3: unzip extracts archive members to the staging dir") {
-    val tmp = java.nio.file.Files.createTempDirectory("zips")
-    val zipPath = tmp.resolve("05--WA--VM2Uniform--2024-01-15.zip").toString
-    val zos = new java.util.zip.ZipOutputStream(
-      new java.io.FileOutputStream(zipPath))
-    zos.putNextEntry(new java.util.zip.ZipEntry("05--WA--VM2Uniform--2024-01-15.tab"))
-    zos.write("LALVOTERID\tCity\nLALWA0001\tSEATTLE\n".getBytes)
-    zos.closeEntry(); zos.close()
-    val out = tmp.resolve("staged").toString
-    val extracted = Ingest.unzip(zipPath, out)
-    assert(extracted.map(p => new java.io.File(p).getName) ===
-      Seq("05--WA--VM2Uniform--2024-01-15.tab"))
-    // extracted TSV is loadable by the strict reader
-    val df = Ingest.readTsv(spark, extracted)
-    assert(df.count() === 1)
-    assert(Quality.lineCount(spark, extracted.head) === 1) // S8
-  }
-
-  test("P11/W1: stale same-state versions are split out, newest kept") {
-    val names = Seq(
-      "01--AK--VM2Uniform--2024-01-15.tab",
-      "03--CA--VM2Uniform--2024-02-01.tab",
-      "03--CA--VM2Uniform--2023-11-01.tab", // stale CA
-      "10--WY--VM2Uniform--2024-01-15.tab")
-    val (keep, stale) = Ingest.splitStaleVersions(names)
-    assert(stale === Seq("03--CA--VM2Uniform--2023-11-01.tab"))
-    assert(keep.toSet === names.toSet -- stale.toSet)
-  }
-
   test("S12: alert messages for unreconciled states") {
     var m = Manifest.empty(spark)
     m = Manifest.register(m, "02--CA--VM2Uniform--2024-02-01.tab", "CA", 2000)
@@ -61,8 +32,8 @@ class IngestUtilSpec extends AnyFunSuite {
       "s3a://bucket/k/01---ST--x.tab", // overlapping `--`: the state is `-ST`
       "03--CA.tab")
     val df = paths.toDF("p")
-    val got = Ingest.withFileMetaFrom(df, col("p"))
-      .select(col("source_file"), col("file_number"), col("state"))
+    val base = substring_index(col("p"), "/", -1)
+    val got = df.select(base, Ingest.fileNumber(base), Ingest.fileState(base))
     val want = df.select(splitMeta(col("p")): _*)
     assert(got.collect().toSeq === want.collect().toSeq)
     assert(got.collect().map(_.getString(2)).toSeq === Seq("NY", "TX", "-ST", "CA.tab"))
@@ -79,5 +50,16 @@ class IngestUtilSpec extends AnyFunSuite {
     assert(got === want)
     assert(got.getString(0) === "07--NY--VM2%20Uniform--a--b.tab")
     assert(got.getInt(1) === 7 && got.getString(2) === "NY")
+  }
+
+  test("F1/F2: a file name without the `--` grammar fails the metadata parse") {
+    val dir = java.nio.file.Files.createTempDirectory("no-grammar")
+    val f = dir.resolve("voters.tab")
+    java.nio.file.Files.writeString(f, "LALVOTERID\tCity\nLALAK1\tANCHORAGE\n")
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    val ex = intercept[Exception] {
+      Ingest.withFileMeta(Ingest.readTsv(spark, Seq(f.toString))).collect()
+    }
+    assert(ex.isInstanceOf[org.apache.spark.SparkThrowable], ex)
   }
 }

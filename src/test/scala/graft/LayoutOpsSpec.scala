@@ -51,9 +51,7 @@ class LayoutOpsSpec extends AnyFunSuite {
   // ---- z-layout pruning --------------------------------------------
 
   test("z-ordered layout: most row groups are stats-pruned for the box") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    sys.props("graft.artifacts.dir") = dir
-    try {
+    TestSpark.withArtifactRoot { dir =>
       val layout = ops.LayoutOps.zorderLayout(spark, sf)
       val layoutDir = layout.inputFiles.head
         .replaceAll("/[^/]*$", "").replaceAll("^file:", "")
@@ -69,13 +67,11 @@ class LayoutOpsSpec extends AnyFunSuite {
       val (nHit, nTotal) = ops.LayoutOps.statsSkipFraction(spark, naturalDir)
       assert(nHit == nTotal,
         s"natural layout unexpectedly prunes: $nHit/$nTotal")
-    } finally sys.props.remove("graft.artifacts.dir")
+    }
   }
 
   test("zorder_prune returns exactly the raw-table box rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder2").toString
-    sys.props("graft.artifacts.dir") = dir
-    try {
+    TestSpark.withArtifactRoot { _ =>
       val viaLayout = ops.LayoutOps.zorderPrune(spark, sf).collect()
       val raw = Tables.lineitem(spark, sf)
         .filter(col("l_partkey").between(40, 80) &&
@@ -86,15 +82,13 @@ class LayoutOpsSpec extends AnyFunSuite {
       // multiset compare (the graded order itself is the oracle's job)
       assert(viaLayout.nonEmpty &&
         viaLayout.toSeq.sortBy(_.toString) == raw.toSeq.sortBy(_.toString))
-    } finally sys.props.remove("graft.artifacts.dir")
+    }
   }
 
   // ---- bloom file-skip ---------------------------------------------
 
   test("bloom sidecar skips most files and never loses a row") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom").toString
-    sys.props("graft.artifacts.dir") = dir
-    try {
+    TestSpark.withArtifactRoot { _ =>
       val layoutFiles = ops.LayoutOps.zorderLayout(spark, sf).inputFiles.length
       // every lineitem of an order must surface through the skip path
       // (Bloom false negatives are impossible; this asserts the
@@ -120,15 +114,13 @@ class LayoutOpsSpec extends AnyFunSuite {
       assert(missing.count() == 0)
       assert(missing.columns.toSeq == Seq("l_orderkey", "l_linenumber",
         "l_partkey", "l_suppkey", "l_quantity"))
-    } finally sys.props.remove("graft.artifacts.dir")
+    }
   }
 
   // ---- incremental aggregate maintenance ----------------------------
 
   test("incremental rollup: state is built once, merge equals recompute") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-incr").toString
-    sys.props("graft.artifacts.dir") = dir
-    try {
+    TestSpark.withArtifactRoot { _ =>
       val got = ops.OlapOps.incrementalRollup(spark, sf).collect()
       val before = ArtifactStore.builds
       val again = ops.OlapOps.incrementalRollup(spark, sf).collect()
@@ -147,7 +139,7 @@ class LayoutOpsSpec extends AnyFunSuite {
       // and the split is genuinely two-sided (delta non-empty)
       assert(Tables.orders(spark, sf)
         .filter(col("o_orderkey") % 10 === 0).count() > 0)
-    } finally sys.props.remove("graft.artifacts.dir")
+    }
   }
 
   // ---- scd2 ---------------------------------------------------------

@@ -1,6 +1,6 @@
 package graft
 
-import graft.etl.{Geo, Merge}
+import graft.etl.Merge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,13 +16,6 @@ class MergeGeoSpec extends AnyFunSuite {
     assert(out.toSeq === Seq(("a", 1), ("b", 20), ("c", 3), ("d", 40)))
   }
 
-  test("deleteMatched removes exactly the tombstoned keys") {
-    val existing = Seq(("a", 1), ("b", 2), ("c", 3)).toDF("k", "v")
-    val out = Merge.deleteMatched(existing, Seq("b").toDF("k"), "k")
-      .orderBy($"k").collect().map(_.getString(0))
-    assert(out.toSeq === Seq("a", "c"))
-  }
-
   test("upsert is idempotent: upsert(upsert(e,u),u) == upsert(e,u)") {
     val existing = Seq(("a", 1), ("b", 2)).toDF("k", "v")
     val updates = Seq(("b", 20), ("c", 30)).toDF("k", "v")
@@ -30,13 +23,6 @@ class MergeGeoSpec extends AnyFunSuite {
     val twice = Merge.upsert(once, updates, "k")
     assert(twice.orderBy($"k").collect().toSeq ===
       once.orderBy($"k").collect().toSeq)
-  }
-
-  test("box cover regression: unaligned top row is covered (review finding)") {
-    // (11.29, -95.0) is inside lat [3.0, 11.3] lon [-110, -80]; the
-    // coordinate-stepping cover missed its cell ("9f")
-    val cover = Geo.coverBox(3.0, 11.3, -110.0, -80.0, 2)
-    assert(cover.contains(Geo.encode(11.29, -95.0, 2)), cover.mkString(","))
   }
 
   test("shingles: short text yields one shingle, no sequence crash") {
@@ -47,30 +33,5 @@ class MergeGeoSpec extends AnyFunSuite {
     assert(out(0) === Seq("tiny"))
     assert(out(1) === Seq("exactly15chars!"))
     assert(out(2).nonEmpty)
-  }
-
-  test("geohash box cover: prefix filter == exact box filter") {
-    // grid of points around a box; cover filter must select exactly
-    // the points whose cell intersects, superset of exact box points
-    val pts = for {
-      i <- 0 until 40; j <- 0 until 40
-    } yield (i * 40 + j, 30.0 + i * 0.5, -110.0 + j * 0.5)
-    val df = pts.toDF("id", "lat", "lon")
-      .withColumn("gh",
-        graft.functions.GraftFunctions.geohash($"lat", $"lon", 8))
-    val (loLat, hiLat, loLon, hiLon) = (35.2, 41.7, -104.3, -96.8)
-    val exact = df.filter($"lat" >= loLat && $"lat" <= hiLat &&
-      $"lon" >= loLon && $"lon" <= hiLon)
-      .select($"id").collect().map(_.getInt(0)).toSet
-    val cover = df.filter(Geo.inBox($"gh", loLat, hiLat, loLon, hiLon, 2))
-      .select($"id").collect().map(_.getInt(0)).toSet
-    assert(exact.subsetOf(cover), s"cover missed ${exact -- cover}")
-    // precision-2 cells are ~11°x5.6°: cover is a bounded superset
-    assert(cover.size <= exact.size + 2000)
-    // refining with the exact predicate after the prefix prune is exact
-    val pruned = df.filter(Geo.inBox($"gh", loLat, hiLat, loLon, hiLon, 2) &&
-      $"lat" >= loLat && $"lat" <= hiLat && $"lon" >= loLon && $"lon" <= hiLon)
-      .select($"id").collect().map(_.getInt(0)).toSet
-    assert(pruned === exact)
   }
 }

@@ -2132,7 +2132,7 @@ class OpsSpec extends AnyFunSuite {
     val und = Seq((1L, 2L), (1L, 3L), (2L, 3L),
       (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
-    val got = ops.Analytics.lpaOn(edges).collect()
+    val got = ops.Analytics.topCommunities(ops.Analytics.lpaLabelsOn(edges)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got === Seq((1L, 3L), (3L, 3L)))
   }

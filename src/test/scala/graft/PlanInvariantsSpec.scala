@@ -706,33 +706,21 @@ class PlanInvariantsSpec extends AnyFunSuite {
       "exact l_orderkey filter not pushed to the candidate-file scan:\n" + p)
   }
 
-  test("streaming ingest batch plans honor the scale invariants") {
-    // VERDICT r3 #6: the stream_* query frames plan as memory-sink
-    // LocalTableScans (nothing to audit), but the foreachBatch ingest
-    // path executes real batch plans every trigger — capture every
-    // plan ingestBatch runs (header pass, collision probe, cross-batch
-    // dedup, publish) via a QueryExecutionListener and hold them to
-    // the same bars as the registered queries.
-    import org.apache.spark.sql.functions._
+  test("batch load plans honor the scale invariants") {
+    // the load runs its plans inside runCatalog (line counts, manifest
+    // lookups, reconcile, the existing-key anti-join, publish, manifest
+    // save), never as a registered query — capture every plan two runs
+    // execute via a QueryExecutionListener and hold them to the same
+    // bars as the registered queries
     val header = Seq("LALVOTERID", "Voters_FirstName", "Voters_Gender",
       "Voters_CalculatedRegDate", "Residence_Addresses_Latitude",
       "Residence_Addresses_Longitude", "City")
-    val schema = org.apache.spark.sql.types.StructType(header.map(
-      org.apache.spark.sql.types.StructField(_,
-        org.apache.spark.sql.types.StringType, nullable = true)))
-    val dir = java.nio.file.Files.createTempDirectory("plan-ingest")
-    def writeFile(name: String, rows: Seq[String]): String = {
-      val f = dir.resolve(name)
-      java.nio.file.Files.writeString(f,
+    val dir = java.nio.file.Files.createTempDirectory("plan-load")
+    val in = java.nio.file.Files.createDirectory(dir.resolve("in"))
+    def writeFile(name: String, rows: Seq[String]): Unit =
+      java.nio.file.Files.writeString(in.resolve(name),
         (header.mkString("\t") +: rows).mkString("", "\n", "\n"))
-      f.toString
-    }
-    val f1 = writeFile("01--AK--VM2Uniform--2024-01-01.tab", Seq(
-      "LALAK1\tANNA\tF\t01/15/2010\t61.2\t-149.9\tANCHORAGE",
-      "LALAK2\tBOB\tM\t02/20/2011\t57.6\t10.4\tJUNEAU"))
-    val f2 = writeFile("02--AK--VM2Uniform--2024-02-01.tab", Seq(
-      "LALAK1\tANNA-DUP\tF\t01/15/2010\t61.2\t-149.9\tANCHORAGE",
-      "LALAK3\tCARA\tF\t03/30/2012\t\t\tNOME"))
+    val manifest = dir.resolve("manifest").toString
     val out = dir.resolve("published").toString
     val plans = scala.collection.mutable.Buffer
       .empty[org.apache.spark.sql.execution.QueryExecution]
@@ -744,37 +732,45 @@ class PlanInvariantsSpec extends AnyFunSuite {
           qe: org.apache.spark.sql.execution.QueryExecution,
           ex: Exception): Unit = ()
     }
-    def batchOf(f: String) =
-      spark.read.textFile(f).toDF("value").withColumn("__file", lit(f))
+    val alerts = new graft.etl.AlertSink.Collecting
     spark.listenerManager.register(listener)
     try {
-      // batch 1 publishes fresh; batch 2 exercises the cross-batch
-      // anti-join against the published sink — the full plan family
-      graft.streaming.StreamingLoad.ingestBatch(batchOf(f1), schema, out)
-      graft.streaming.StreamingLoad.ingestBatch(batchOf(f2), schema, out)
+      // run 1 publishes fresh; run 2 loads another state over the
+      // published table, so it takes the existing-key anti-join
+      writeFile("01--AK--VM2Uniform--2024-01-01.tab", Seq(
+        "LALAK1\tANNA\tF\t01/15/2010\t61.2\t-149.9\tANCHORAGE",
+        "LALAK2\tBOB\tM\t02/20/2011\t57.6\t10.4\tJUNEAU"))
+      assert(graft.etl.LoadPipeline.runCatalog(spark, in.toString, manifest, out,
+        alertSink = alerts).size === 1)
+      writeFile("02--CA--VM2Uniform--2024-02-01.tab", Seq(
+        "LALAK1\tANNA-DUP\tF\t01/15/2010\t61.2\t-149.9\tANCHORAGE",
+        "LALCA3\tCARA\tF\t03/30/2012\t\t\tNOME"))
+      assert(graft.etl.LoadPipeline.runCatalog(spark, in.toString, manifest, out,
+        alertSink = alerts).size === 1)
       // QueryExecutionListener delivery is async: poll to a deadline
-      // instead of a fixed sleep (flaky on a loaded box) — ingest runs
-      // several actions per batch, so expect a healthy number of plans
+      // instead of a fixed sleep (flaky on a loaded box) — each run
+      // executes several actions, so expect a healthy number of plans
       val deadline = System.currentTimeMillis() + 15000
-      while (plans.synchronized(plans.size) < 4 &&
+      while (plans.synchronized(plans.size) < 8 &&
           System.currentTimeMillis() < deadline)
         Thread.sleep(100)
     } finally spark.listenerManager.unregister(listener)
     val captured = plans.synchronized { plans.toList }
-    assert(captured.size >= 4,
-      s"listener captured only ${captured.size} ingest plans")
+    assert(captured.size >= 8,
+      s"listener captured only ${captured.size} load plans")
+    assert(captured.exists(_.executedPlan.toString.contains("LeftAnti")),
+      "no run took the existing-key anti-join")
     captured.foreach { qe =>
       val phys = qe.executedPlan.toString
       assert(!phys.contains("CartesianProduct") &&
         !phys.contains("BroadcastNestedLoopJoin"),
-        s"nested-loop/cartesian join in ingest plan:\n$phys")
+        s"nested-loop/cartesian join in load plan:\n$phys")
       val globalWindows = qe.optimizedPlan.collect {
         case w: LWindow if w.partitionSpec.isEmpty => w
       }
       assert(globalWindows.isEmpty, s"partition-less window in:\n$phys")
-      // the only broadcast hint in the path is the driver-built
-      // per-file header frame (a LocalRelation) — never a scan of
-      // batch/sink data
+      // a broadcast hint may only cover driver-built data (a
+      // LocalRelation) — never a scan of input or published data
       qe.analyzed.collect {
         case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint =>
           val leaves = h.child.collectLeaves()
@@ -784,6 +780,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
       }
     }
     // and the data itself round-tripped correctly (3 rows, dup dropped)
+    assert(alerts.messages.isEmpty, alerts.messages)
     assert(spark.read.parquet(out).count() === 3)
   }
 
@@ -897,7 +894,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
     // The sweep above runs against a warm store, so one-time artifact
     // builds (trainers, graph builds, funnel materializations) only
     // appear in it by accident. This arm forces them: an ISOLATED
-    // store (the ArtifactStoreSpec sys-props hook) makes every
+    // store (`TestSpark.withArtifactRoot`) makes every
     // artifact cold, and the representative artifact-backed queries
     // below rebuild under the listener. Representative, not
     // exhaustive: one member per build family (graph, IVF trainer,
@@ -909,8 +906,6 @@ class PlanInvariantsSpec extends AnyFunSuite {
       "dedup_lsh_append", "text_lm_score", "mm_scene_cuts",
       "mm_build_report", "mm_phash_append", "corpus_build_report",
       "geo_dbscan")
-    val dir = java.nio.file.Files
-      .createTempDirectory("plan-cold-store").toString
     val captured = scala.collection.mutable.Buffer
       .empty[(String, org.apache.spark.sql.execution.QueryExecution)]
     @volatile var current = "<pre>"
@@ -926,32 +921,32 @@ class PlanInvariantsSpec extends AnyFunSuite {
     }
     val before = ArtifactStore.builds
     org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-    sys.props("graft.artifacts.dir") = dir
-    spark.listenerManager.register(listener)
-    try {
-      builders.foreach { n =>
-        current = n
-        // count() forces the serve read too — builds that hide behind
-        // a lazily-returned scan still execute here
-        SparkEntry.queries(n)(spark, sf).count()
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      }
-    } finally {
-      spark.listenerManager.unregister(listener)
-      sys.props.remove("graft.artifacts.dir")
-      // the cold builds can materialize hundreds of MB of artifacts —
-      // delete the temp store, best-effort (ADVICE r14). Files.walk
-      // holds open directory handles until closed (its javadoc
-      // mandates try-with-resources), hence the explicit close.
+    TestSpark.withArtifactRoot { dir =>
+      spark.listenerManager.register(listener)
       try {
-        import scala.jdk.CollectionConverters._
-        val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        try stream.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala
-          .foreach(p => try java.nio.file.Files.deleteIfExists(p)
-            catch { case _: java.io.IOException => () })
-        finally stream.close()
-      } catch { case _: java.io.IOException => () }
+        builders.foreach { n =>
+          current = n
+          // count() forces the serve read too — builds that hide behind
+          // a lazily-returned scan still execute here
+          SparkEntry.queries(n)(spark, sf).count()
+          org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
+        }
+      } finally {
+        spark.listenerManager.unregister(listener)
+        // the cold builds can materialize hundreds of MB of artifacts —
+        // delete the temp store, best-effort (ADVICE r14). Files.walk
+        // holds open directory handles until closed (its javadoc
+        // mandates try-with-resources), hence the explicit close.
+        try {
+          import scala.jdk.CollectionConverters._
+          val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+          try stream.sorted(java.util.Comparator.reverseOrder())
+            .iterator().asScala
+            .foreach(p => try java.nio.file.Files.deleteIfExists(p)
+              catch { case _: java.io.IOException => () })
+          finally stream.close()
+        } catch { case _: java.io.IOException => () }
+      }
     }
     assert(ArtifactStore.builds > before,
       "cold store triggered no artifact builds — the sweep is vacuous")

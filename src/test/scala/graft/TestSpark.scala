@@ -16,4 +16,19 @@ object TestSpark {
 
   def resource(path: String): String =
     getClass.getResource(path).getPath
+
+  /** Run `body` against an isolated artifact store: a fresh temp dir set
+    * as `graft.artifacts.dir`, with the property's previous value (say,
+    * one passed as `-Dgraft.artifacts.dir`) restored afterwards. */
+  def withArtifactRoot[A](body: String => A): A = {
+    val key = "graft.artifacts.dir"
+    val prev = sys.props.get(key)
+    val dir = java.nio.file.Files.createTempDirectory("graft-art").toString
+    sys.props(key) = dir
+    try body(dir)
+    finally prev match {
+      case Some(v) => sys.props(key) = v
+      case None => sys.props.remove(key)
+    }
+  }
 }
